@@ -1076,8 +1076,9 @@ def main() -> None:
     # driver's line diff never reads a "dropped" query again), then
     # the frozen kernel, then the slowest of the rest (VERDICT r11
     # #4).  Line values are rounded to 2 decimals to fit more entries;
-    # full 3-decimal timings live in BENCH_DETAIL.json.
-    LIMIT = 1960
+    # full 3-decimal timings live in BENCH_DETAIL.json.  1930 leaves
+    # >= 70 bytes of slack under the 2000-byte capture.
+    LIMIT = 1930
     rest_slowest = sorted(
         (n for n in timings if n not in PERF_COMPAT and n not in KERNEL_30),
         key=lambda n: timings[n],

@@ -21,20 +21,19 @@ FEATURE_WIDTH = 1525
 
 def features_matrix(payloads, width: int = FEATURE_WIDTH):
     """The shared numpy kernel for BytesProcessor.py:270-286: pad/
-    truncate each payload to ``width`` bytes and scale by 1/255 into
-    float32 rows (uint8 / np.float32(255) keeps the reference's exact
-    value-based promotion).  Used by both the pcap source's fused
-    featurize (same Arrow batch as the parse — one Python crossing)
-    and the standalone ``with_features`` pandas UDF."""
+    truncate each payload to ``width`` bytes and scale by 1/255 into an
+    (n, width) float32 matrix (uint8 / np.float32(255) keeps the
+    reference's exact value-based promotion).  The pcap reader's batch
+    builder wraps the flat matrix as the Arrow ``features`` column, on
+    the same batch as the parse — one Python crossing."""
     import numpy as np
 
-    n = len(payloads)
-    mat = np.zeros((n, width), dtype=np.uint8)
+    mat = np.zeros((len(payloads), width), dtype=np.uint8)
     for i, p in enumerate(payloads):
         if p:
             a = np.frombuffer(p, dtype=np.uint8)[:width]
             mat[i, : len(a)] = a
-    return list(mat / np.float32(255))
+    return mat / np.float32(255)
 
 
 def bytes_to_features(payload: Column, width: int = FEATURE_WIDTH) -> Column:

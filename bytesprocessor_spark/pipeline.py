@@ -4,17 +4,18 @@ Spark-first re-expression of ``BytesProcessor.process_pcap``
 
 Reference dataflow and its mapping (SURVEY §3.1):
 
-    open + dpkt reader + chunk loop (BP:56-104)  -> read_pcap (binaryFile + mapInPandas)
-    spawn-pool sub-chunk parse (BP:121-158)      -> executor task parallelism
-    _extract_ranges (BP:145,339-354)             -> extract_ranges (pushable OR-of-between)
+    open + dpkt reader + chunk loop (BP:56-104)  -> read_pcap (driver chunk plan + mapInArrow)
+    spawn-pool sub-chunk parse (BP:121-158)      -> one executor task per chunk
+    _extract_ranges (BP:145,339-354)             -> range predicate in the parse worker,
+                                                    then extract_ranges (pushable OR-of-between)
     label_attack_data (BP:167,288-337)           -> label_attacks (codegen when-chain)
-    np.frombuffer + pad/normalize (BP:173-184)   -> with_features (Arrow-batched numpy)
+    np.frombuffer + pad/normalize (BP:173-184)   -> features_matrix on the parse's Arrow batch
     data_<N>/adversarial_<N>.parquet (BP:110-119)-> dual parquet sinks
 
 No shuffle anywhere: parse, filter, label, featurize and write pipeline
-within one stage per input split, which is exactly the property that
-makes this run at 100 TB — every pcap file is an independent unit of
-work.  The adversarial sink re-reads the primary output with an
+within one stage, one task per planned chunk, which is exactly the
+property that makes this run at 100 TB — every chunk is an independent
+unit of work.  The adversarial sink re-reads the primary output with an
 ``is_forward`` pushdown filter instead of caching the whole labeled
 set (BP holds it in RAM, BP:160-194).
 """
@@ -23,7 +24,6 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -31,25 +31,7 @@ from pyspark.sql import types as T
 from bytesprocessor_spark.functions.bytes import FEATURE_WIDTH, widen_features
 from bytesprocessor_spark.operators.labeling import AttackSpec, extract_ranges, label_attacks
 from bytesprocessor_spark.operators.quality import assert_no_nulls
-from bytesprocessor_spark.sources.pcap import read_pcap
-
-
-def with_features(
-    df: DataFrame,
-    payload_col: str = "payload",
-    out_col: str = "features",
-    width: int = FEATURE_WIDTH,
-) -> DataFrame:
-    """Pad/truncate payload bytes to ``width`` and scale to [0,1]
-    float32 (BytesProcessor.py:270-286) as one Arrow-vectorized batch
-    op: whole-batch numpy matrix fill, no per-row Python arithmetic."""
-    from bytesprocessor_spark.functions.bytes import features_matrix
-
-    @F.pandas_udf(T.ArrayType(T.FloatType()))
-    def featurize(payloads: pd.Series) -> pd.Series:
-        return pd.Series(features_matrix(payloads, width))
-
-    return df.withColumn(out_col, featurize(F.col(payload_col)))
+from bytesprocessor_spark.sources.pcap import SPLIT_PACKETS, read_pcap
 
 
 def process_pcap(
@@ -62,9 +44,8 @@ def process_pcap(
     widen: bool = False,
     check_quality: bool = True,
     mode: str = "overwrite",
-    split_packets: int | None = None,
+    split_packets: int = SPLIT_PACKETS,
     partition_by: Sequence[str] = (),
-    fuse_features: bool = True,
 ) -> tuple[str, str]:
     """Run the full pipeline; returns (data_dir, adversarial_dir).
 
@@ -72,12 +53,9 @@ def process_pcap(
     columns (BP:183-184) — applied only at the sink; the plan carries
     one array column (SURVEY §4.2).
 
-    ``fuse_features=True`` (default) pushes the range filter and the
-    featurize kernel into the parse's own Arrow batch (one Python
-    crossing for the whole stage — the reference's chunk-local
-    dataflow, BP:121-187).  Two chained Python operators in one stage
-    measurably stall on the double JVM↔worker hop; False keeps the
-    composable two-operator form for comparison.
+    The range filter and the featurize kernel run inside the parse's
+    own Arrow batch (one Python crossing for the whole stage — the
+    reference's chunk-local dataflow, BP:121-187).
     """
     data_dir = f"{output_dir}/data"
     adv_dir = f"{output_dir}/adversarial"
@@ -86,17 +64,11 @@ def process_pcap(
         spark,
         pcap_path,
         split_packets=split_packets,
-        ranges=ranges if fuse_features else None,
-        features=fuse_features,
+        ranges=ranges,
+        features=True,
         feature_width=feature_width,
     )
-    in_range = extract_ranges(packets, ranges)
-    labeled = label_attacks(in_range, attacks)
-    feats = (
-        labeled.drop("payload")
-        if fuse_features
-        else with_features(labeled, width=feature_width).drop("payload")
-    )
+    feats = label_attacks(extract_ranges(packets, ranges), attacks).drop("payload")
     out = widen_features(feats, "features", feature_width) if widen else feats
 
     # partition_by=("label",) hive-partitions the sink so downstream

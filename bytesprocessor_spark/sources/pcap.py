@@ -1,9 +1,21 @@
 """Pcap source (SURVEY §2.1 S1-S2, §2.2 P1-P2).
 
-A self-contained libpcap-format reader + Ethernet/IPv4/TCP/UDP
-decoder (plain ``struct``; the runtime has no packet library), run as
-an Arrow-batched ``mapInPandas`` over ``binaryFile`` rows: one task
-per pcap file, every downstream operator distributed.
+A self-contained libpcap/pcapng reader + Ethernet/IPv4/TCP/UDP decoder
+(plain ``struct``; the runtime has no packet library).  Every read goes
+through one chunk plan and one batch builder:
+
+  * plan (driver, :func:`plan_chunks`): resolve the path (a directory
+    gives its ``*.pcap`` and ``*.pcapng`` files, nothing else), then
+    walk each file's record headers into byte-range chunks of
+    ``split_packets`` records — a serial walk of ~1.3 µs per record
+    that never reads a payload;
+  * parse (executor, :func:`record_batches`): range-read one chunk,
+    parse each frame, apply the range predicate and emit Arrow batches
+    of <= 4,096 rows, with the feature vector fused in on request.
+
+:func:`read_pcap` runs the plan as a local table feeding one
+``mapInArrow`` (no index job, no exchange); the ``format("pcap")``
+DataSource and the streaming pipeline call the same two functions.
 
 Parity with the reference parser (BytesProcessor.py:211-268):
   * non-IP frames dropped (BP:222-223), non-TCP/UDP dropped
@@ -14,21 +26,20 @@ Parity with the reference parser (BytesProcessor.py:211-268):
     serialized IP layer and keeps the original (now stale) checksums —
     byte-for-byte what dpkt emits when fields are reassigned and the
     stored checksum is non-zero (BP:258-268).
-
-Scale posture: ``binaryFile`` gives one task per file, the right unit
-for a many-file pcap lake (the reference streams ONE file serially —
-BP:56-64 — so any multi-file layout already beats it).  A record-
-offset-splitting DataSource for single huge files is the planned step
-8 of SURVEY §7.
 """
 
 from __future__ import annotations
 
+import glob
+import os
 import struct
 from collections.abc import Iterable, Iterator
+from itertools import islice
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+from bytesprocessor_spark.functions.bytes import FEATURE_WIDTH
 
 # Output schema of the parse step (SURVEY §1.2).
 PACKET_SCHEMA = T.StructType(
@@ -289,16 +300,24 @@ def _parse_ip6(ts: float, ip6: bytes) -> dict | None:
     }
 
 
-def parse_pcap_bytes(data: bytes, extended: bool = False) -> Iterator[dict]:
-    """All parsed packet dicts from one pcap file's bytes; per-packet
-    errors are swallowed (BP:251-253)."""
-    for ts, frame in iter_pcap_records(data):
+def parse_records(
+    records: Iterable[tuple[float, bytes]], extended: bool = False
+) -> Iterator[dict]:
+    """Parsed packet dicts of (timestamp, frame) records; per-packet
+    errors are swallowed (BP:251-253).  Every read path parses here."""
+    for ts, frame in records:
         try:
             row = parse_frame(ts, frame, extended)
         except Exception:
             continue
         if row is not None:
             yield row
+
+
+def parse_pcap_bytes(data: bytes, extended: bool = False) -> Iterator[dict]:
+    """All parsed packet dicts from one capture file's bytes, in
+    process — the reference the Spark reader is tested against."""
+    return parse_records(iter_pcap_records(data), extended)
 
 
 _COLS = [f.name for f in PACKET_SCHEMA.fields]
@@ -309,6 +328,12 @@ FEATURED_SCHEMA = T.StructType(
     + [T.StructField("features", T.ArrayType(T.FloatType()), True)]
 )
 
+# Records per planned chunk: the reference's chunk_size
+# (BytesProcessor.py:16) and the CLI's --chunk-size default.
+SPLIT_PACKETS = 20_000
+# Rows per Arrow batch out of the parse worker.
+BATCH_ROWS = 4096
+
 
 def _range_predicate(ranges):
     """Python-side mirror of extract_ranges' inclusive OR-of-between
@@ -317,83 +342,106 @@ def _range_predicate(ranges):
     if not ranges:
         return None
     rs = [(float(lo), float(hi)) for lo, hi in ranges]
-    return lambda ts: any(lo <= ts <= hi for lo, hi in rs)
+    return lambda row: any(lo <= row["timestamp"] <= hi for lo, hi in rs)
 
 
-def _rows_to_pdf(rows, features: bool, width: int):
-    import pandas as pd
-
-    pdf = pd.DataFrame(rows, columns=_COLS)
-    if features:
-        from bytesprocessor_spark.functions.bytes import features_matrix
-
-        pdf["features"] = features_matrix(pdf["payload"], width)
-    return pdf
-
-
-def read_pcap(
-    spark: SparkSession,
-    path: str,
-    batch_size: int = 4096,
-    split_packets: int | None = None,
-    parallelism: int | None = None,
+def record_batches(
+    records: Iterable[tuple[float, bytes]],
     extended: bool = False,
     ranges=None,
     features: bool = False,
-    feature_width: int = 1525,
-) -> DataFrame:
-    """Pcap scan (S1).
+    width: int = FEATURE_WIDTH,
+):
+    """The batch builder: (timestamp, frame) records -> parse -> range
+    filter -> ``pyarrow.RecordBatch`` of <= BATCH_ROWS rows in
+    PACKET_SCHEMA (FEATURED_SCHEMA with ``features``).  The feature
+    column is a list array over the flat float32 matrix of
+    ``features_matrix``: no per-row Python objects."""
+    import numpy as np
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    Default mode: ``binaryFile`` source (one task per file) +
-    Arrow-batched parse — right for a many-file pcap lake, where file
-    count >> core count.
+    from bytesprocessor_spark.functions.bytes import features_matrix
 
-    ``split_packets`` switches to the record-offset split reader
-    (:func:`read_pcap_split`): single huge captures are indexed into
-    ~split_packets-record byte ranges, each parsed by an independent
-    task — the scalable replacement for the reference's serial chunk
-    loop (BytesProcessor.py:62-65) AND its duplicate-emitting sub-chunk
-    splitter (BP:196-205, SURVEY §3.4.4).
-
-    ``ranges``/``features``: source-fused filter + featurize.  The
-    range predicate drops out-of-range packets inside the parse worker
-    (they never cross the Arrow boundary — the reference's "filter
-    before payload work", BP:144-145) and the 1525-wide float vector is
-    computed on the same Arrow batch as the parse.  One Python
-    crossing for the whole parse→filter→featurize pipeline; chaining a
-    second Python operator in the same stage measurably stalls on the
-    double JVM↔worker hop.
-    """
-    if split_packets:
-        return read_pcap_split(
-            spark, path, split_packets, parallelism, extended,
-            ranges=ranges, features=features, feature_width=feature_width,
-        )
-
-    files = spark.read.format("binaryFile").load(path)
+    schema = to_arrow_schema(FEATURED_SCHEMA if features else PACKET_SCHEMA)
+    rows = parse_records(records, extended)
     in_range = _range_predicate(ranges)
-    schema = FEATURED_SCHEMA if features else PACKET_SCHEMA
-
-    def parse_partition(batches):
-        for pdf in batches:
-            for content in pdf["content"]:
-                rows: list[dict] = []
-                for row in parse_pcap_bytes(bytes(content), extended):
-                    if in_range is not None and not in_range(row["timestamp"]):
-                        continue
-                    rows.append(row)
-                    if len(rows) >= batch_size:
-                        yield _rows_to_pdf(rows, features, feature_width)
-                        rows = []
-                if rows:
-                    yield _rows_to_pdf(rows, features, feature_width)
-
-    return files.select("content").mapInPandas(parse_partition, schema=schema)
+    if in_range is not None:
+        rows = filter(in_range, rows)
+    while batch := list(islice(rows, BATCH_ROWS)):
+        cols = [pa.array([r[c] for r in batch], f.type) for c, f in zip(_COLS, schema)]
+        if features:
+            mat = features_matrix([r["payload"] for r in batch], width)
+            offsets = np.arange(0, mat.size + 1, width, dtype=np.int32)
+            cols.append(pa.ListArray.from_arrays(offsets, mat.ravel()))
+        yield pa.RecordBatch.from_arrays(cols, schema=schema)
 
 
 _CHUNK_SCHEMA = (
     "path string, offset long, length long, endian string, frac_div double, meta string"
 )
+
+
+def plan_chunks(path: str, split_packets: int = SPLIT_PACKETS) -> list[tuple]:
+    """The chunk plan, built on the driver: ``path`` resolves to a
+    directory's ``*.pcap`` and ``*.pcapng`` files, else to the glob's
+    matches, else to itself; each file's record headers are walked
+    into ``split_packets``-record byte-range chunks (~1.3 µs per
+    record, payloads never read)."""
+    if os.path.isdir(path):
+        paths = sorted(
+            glob.glob(os.path.join(path, "*.pcap")) + glob.glob(os.path.join(path, "*.pcapng"))
+        )
+    else:
+        paths = sorted(glob.glob(path)) or [path]
+    return [chunk for p in paths for chunk in index_capture_chunks(p, split_packets)]
+
+
+def read_chunk(
+    path: str, offset: int, length: int, endian: str, frac_div: float, meta: str
+) -> Iterator[tuple[float, bytes]]:
+    """Records of one planned chunk from a bounded range read — the
+    single seam to replace with an object-store ranged GET (fsspec:
+    ``fs.cat_file(path, offset, offset + length)``); no task ever holds
+    a whole capture in memory."""
+    with open(path, "rb") as f:
+        f.seek(offset)
+        data = f.read(length)
+    return iter_chunk_records(data, endian, frac_div, meta)
+
+
+def read_pcap(
+    spark: SparkSession,
+    path: str,
+    split_packets: int = SPLIT_PACKETS,
+    extended: bool = False,
+    ranges=None,
+    features: bool = False,
+    feature_width: int = FEATURE_WIDTH,
+) -> DataFrame:
+    """Pcap scan (S1): the driver-built chunk plan (:func:`plan_chunks`)
+    as a local table, one ``mapInArrow`` task per chunk (up to
+    ``defaultParallelism`` tasks) running :func:`record_batches` — no
+    index job, no exchange.  The scalable replacement for the
+    reference's serial chunk loop (BytesProcessor.py:62-65) and its
+    duplicate-emitting sub-chunk splitter (BP:196-205, SURVEY §3.4.4).
+
+    ``ranges``/``features``: source-fused filter + featurize.  The
+    range predicate drops out-of-range packets inside the parse worker
+    (they never cross the Arrow boundary — the reference's "filter
+    before payload work", BP:144-145) and the float vector is computed
+    on the same Arrow batch as the parse: one Python crossing for the
+    whole parse→filter→featurize pipeline.
+    """
+    chunks = spark.createDataFrame(plan_chunks(path, split_packets), _CHUNK_SCHEMA)
+
+    def parse_chunks(batches):
+        records = (
+            rec for b in batches for chunk in b.to_pylist() for rec in read_chunk(**chunk)
+        )
+        return record_batches(records, extended, ranges, features, feature_width)
+
+    return chunks.mapInArrow(parse_chunks, FEATURED_SCHEMA if features else PACKET_SCHEMA)
 
 
 def index_capture_chunks(
@@ -419,7 +467,9 @@ def index_pcap_chunks(path: str, split_packets: int) -> Iterator[tuple[str, int,
     """Stream-walk one pcap's record headers (seek past payloads, read
     16 bytes per record) and emit (path, offset, length, endian,
     frac_div) byte-range chunks of ``split_packets`` records each.
-    Never materializes the file — the index pass is pure I/O."""
+    Never materializes the file — the index pass is pure I/O.  A record
+    whose ``incl_len`` runs past the end of the file ends the walk, as
+    it ends :func:`_iter_records`."""
     with open(path, "rb") as f:
         head = f.read(24)
         if len(head) < 24:
@@ -427,6 +477,7 @@ def index_pcap_chunks(path: str, split_packets: int) -> Iterator[tuple[str, int,
         (magic,) = struct.unpack_from("<I", head, 0)
         endian, frac_div = _pcap_format(magic)
         rec_hdr = struct.Struct(endian + "IIII")
+        size = os.fstat(f.fileno()).st_size
         chunk_start = 24
         n_in_chunk = 0
         off = 24
@@ -436,6 +487,8 @@ def index_pcap_chunks(path: str, split_packets: int) -> Iterator[tuple[str, int,
                 break
             _sec, _frac, incl_len, _orig = rec_hdr.unpack(hdr)
             nxt = off + 16 + incl_len
+            if nxt > size:
+                break
             f.seek(incl_len, 1)
             off = nxt
             n_in_chunk += 1
@@ -445,80 +498,6 @@ def index_pcap_chunks(path: str, split_packets: int) -> Iterator[tuple[str, int,
                 n_in_chunk = 0
         if n_in_chunk > 0:
             yield (path, chunk_start, off - chunk_start, endian, frac_div, "")
-
-
-def read_pcap_split(
-    spark: SparkSession,
-    path: str,
-    split_packets: int = 100_000,
-    parallelism: int | None = None,
-    extended: bool = False,
-    ranges=None,
-    features: bool = False,
-    feature_width: int = 1525,
-) -> DataFrame:
-    """Two-stage distributed read of large pcap files:
-
-      stage 1 (one task per file): header-walk the record index, emit
-        byte-range chunk descriptors — metadata only, no payload moves;
-      stage 2 (one task per chunk after a metadata-row repartition):
-        range-read [offset, offset+length) and parse.
-
-    On object storage stage 2 becomes a range GET per chunk; nothing
-    ever holds a whole file in memory, unlike ``binaryFile``.
-    """
-    import glob as _glob
-    import os
-
-    import pandas as pd
-
-    if os.path.isdir(path):
-        paths = sorted(
-            _glob.glob(os.path.join(path, "*.pcap"))
-            + _glob.glob(os.path.join(path, "*.pcapng"))
-        )
-    else:
-        paths = sorted(_glob.glob(path)) or [path]
-    files_df = spark.createDataFrame([(p,) for p in paths], "path string").repartition(
-        len(paths)
-    )
-
-    def index_partition(batches):
-        for pdf in batches:
-            for p in pdf["path"]:
-                chunks = list(index_capture_chunks(p, split_packets))
-                if chunks:
-                    yield pd.DataFrame(
-                        chunks,
-                        columns=["path", "offset", "length", "endian", "frac_div", "meta"],
-                    )
-
-    chunks = files_df.mapInPandas(index_partition, schema=_CHUNK_SCHEMA)
-    n_parts = parallelism or spark.sparkContext.defaultParallelism
-    chunks = chunks.repartition(n_parts)
-    in_range = _range_predicate(ranges)
-    schema = FEATURED_SCHEMA if features else PACKET_SCHEMA
-
-    def parse_range(batches):
-        for pdf in batches:
-            for p, off, length, endian, frac_div, meta in pdf.itertuples(index=False):
-                with open(p, "rb") as f:
-                    f.seek(off)
-                    data = f.read(length)
-                rows = []
-                for ts, frame in iter_chunk_records(data, endian, frac_div, meta):
-                    try:
-                        row = parse_frame(ts, frame, extended)
-                    except Exception:
-                        continue
-                    if row is not None:
-                        if in_range is not None and not in_range(row["timestamp"]):
-                            continue
-                        rows.append(row)
-                if rows:
-                    yield _rows_to_pdf(rows, features, feature_width)
-
-    return chunks.mapInPandas(parse_range, schema=schema)
 
 
 def iter_chunk_records(

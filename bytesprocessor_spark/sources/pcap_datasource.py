@@ -1,27 +1,22 @@
 """Spark 4 Python DataSource for pcap files (SURVEY §7 step 8).
 
-Makes the record-offset split reader a first-class source:
+Exposes the pcap reader as a first-class source:
 
     spark.dataSource.register(PcapDataSource)
     df = spark.read.format("pcap").option("split_packets", 50000).load(path)
 
-Planning mirrors :func:`bytesprocessor_spark.sources.pcap.read_pcap_split`:
+It is a thin caller of the reader in
+:mod:`bytesprocessor_spark.sources.pcap`:
 
-  * ``partitions()`` (driver): header-walk each file's record index —
-    16 bytes read + one seek per record, no payload ever loaded — and
-    emit one InputPartition per ~``split_packets``-record byte range.
-  * ``read(partition)`` (executor): range-read [offset, offset+length)
-    and parse with the shared frame parser.
+  * ``partitions()`` (driver): :func:`plan_chunks` — one InputPartition
+    per ~``split_packets``-record byte range (default
+    ``SPLIT_PACKETS``), from a header walk that never loads a payload.
+  * ``read(partition)`` (executor): :func:`read_chunk` range-reads the
+    chunk and :func:`record_batches` parses it into Arrow batches.
 
 Object-storage posture: both the header walk and the range read only
 need ``open() -> seek/read`` semantics, i.e. exactly what an S3-style
-ranged GET provides.  Swapping ``open(path, "rb")`` for an
-fsspec/boto3 ranged reader makes this source cloud-native with no
-change to planning: partitions are (path, offset, length) triples
-either way, so executors issue one bounded GET per chunk and never
-hold a whole capture in memory.  (The container has no object-store
-client, so the local-file opener is the one wired in; the seam is
-``_open_range``.)
+ranged GET provides; the seam is ``read_chunk``.
 
 The reference reads captures serially in chunked batches
 (BytesProcessor.py:62-81, 196-205); this source is the distributed
@@ -36,47 +31,11 @@ from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
 from bytesprocessor_spark.sources.pcap import (
     PACKET_SCHEMA,
-    index_capture_chunks,
-    iter_chunk_records,
-    parse_frame,
+    SPLIT_PACKETS,
+    plan_chunks,
+    read_chunk,
+    record_batches,
 )
-
-_COL_ORDER = [f.name for f in PACKET_SCHEMA.fields]
-
-
-class PcapChunk(InputPartition):
-    """One byte-range of whole capture records (classic pcap or pcapng
-    blocks): the unit of parallelism."""
-
-    def __init__(
-        self, path: str, offset: int, length: int, endian: str, frac_div: float, meta: str = ""
-    ):
-        self.path = path
-        self.offset = offset
-        self.length = length
-        self.endian = endian
-        self.frac_div = frac_div
-        self.meta = meta
-
-
-def _open_range(path: str, offset: int, length: int) -> bytes:
-    """Bounded range read — the single seam to replace with an
-    object-store ranged GET (fsspec: ``fs.cat_file(path, offset,
-    offset+length)``)."""
-    with open(path, "rb") as f:
-        f.seek(offset)
-        return f.read(length)
-
-
-def _resolve_paths(path: str) -> list[str]:
-    import glob
-    import os
-
-    if os.path.isdir(path):
-        return sorted(
-            glob.glob(os.path.join(path, "*.pcap")) + glob.glob(os.path.join(path, "*.pcapng"))
-        )
-    return sorted(glob.glob(path)) or [path]
 
 
 class PcapReader(DataSourceReader):
@@ -84,32 +43,17 @@ class PcapReader(DataSourceReader):
         self.path = options.get("path")
         if not self.path:
             raise ValueError("pcap source requires a path: .load('/data/*.pcap')")
-        self.split_packets = int(options.get("split_packets", 100_000))
+        self.split_packets = int(options.get("split_packets", SPLIT_PACKETS))
         # opt-in extended protocol parse (ICMP/ICMPv6/SCTP/IPv6)
         self.extended = str(options.get("extended", "false")).lower() == "true"
 
-    def partitions(self) -> Sequence[PcapChunk]:
-        parts = [
-            PcapChunk(*chunk)
-            for p in _resolve_paths(self.path)
-            for chunk in index_capture_chunks(p, self.split_packets)
-        ]
+    def partitions(self) -> Sequence[InputPartition]:
+        parts = [InputPartition(chunk) for chunk in plan_chunks(self.path, self.split_packets)]
         # Spark requires >= 1 partition; an empty capture yields no rows.
-        return parts or [PcapChunk(self.path, 0, 0, "<", 1e6)]
+        return parts or [InputPartition((self.path, 0, 0, "<", 1e6, ""))]
 
-    def read(self, partition: PcapChunk) -> Iterator[tuple]:
-        if partition.length <= 0:
-            return
-        data = _open_range(partition.path, partition.offset, partition.length)
-        for ts, frame in iter_chunk_records(
-            data, partition.endian, partition.frac_div, getattr(partition, "meta", "")
-        ):
-            try:
-                row = parse_frame(ts, frame, self.extended)
-            except Exception:
-                continue
-            if row is not None:
-                yield tuple(row[c] for c in _COL_ORDER)
+    def read(self, partition: InputPartition) -> Iterator:
+        return record_batches(read_chunk(*partition.value), self.extended)
 
 
 class PcapDataSource(DataSource):

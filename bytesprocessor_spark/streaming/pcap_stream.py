@@ -14,15 +14,12 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-import pandas as pd
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from bytesprocessor_spark.functions.bytes import FEATURE_WIDTH
 from bytesprocessor_spark.operators.labeling import AttackSpec, extract_ranges, label_attacks
-from bytesprocessor_spark.pipeline import with_features
-from bytesprocessor_spark.sources.pcap import PACKET_SCHEMA, parse_pcap_bytes
+from bytesprocessor_spark.sources.pcap import FEATURED_SCHEMA, iter_pcap_records, record_batches
 
 
 def stream_pcap_directory(
@@ -39,28 +36,32 @@ def stream_pcap_directory(
 
     ``maxFilesPerTrigger`` bounds micro-batch size the way chunk_size
     bounds the reference's loop (BytesProcessor.py:39) — backpressure
-    by construction.
+    by construction.  The landing directory is read with ``binaryFile``
+    (file-arrival semantics); each new ``*.pcap`` / ``*.pcapng`` file
+    goes through the batch reader's :func:`record_batches`, range
+    filter and features fused in.
     """
     files = (
         spark.readStream.format("binaryFile")
         .schema(
             "path string, modificationTime timestamp, length long, content binary"
         )
-        .option("pathGlobFilter", "*.pcap")
+        .option("pathGlobFilter", "*.{pcap,pcapng}")
         .option("maxFilesPerTrigger", str(max_files_per_trigger))
         .load(landing_dir)
     )
 
-    def parse_partition(batches):
-        for pdf in batches:
-            for content in pdf["content"]:
-                rows = list(parse_pcap_bytes(bytes(content)))
-                if rows:
-                    yield pd.DataFrame(rows, columns=[f.name for f in PACKET_SCHEMA.fields])
+    def parse_files(batches):
+        records = (
+            rec
+            for b in batches
+            for content in b.column("content").to_pylist()
+            for rec in iter_pcap_records(content)
+        )
+        return record_batches(records, ranges=ranges, features=True, width=feature_width)
 
-    packets = files.select("content").mapInPandas(parse_partition, schema=PACKET_SCHEMA)
-    labeled = label_attacks(extract_ranges(packets, ranges), attacks)
-    feats = with_features(labeled, width=feature_width).drop("payload")
+    packets = files.select("content").mapInArrow(parse_files, FEATURED_SCHEMA)
+    feats = label_attacks(extract_ranges(packets, ranges), attacks).drop("payload")
 
     return (
         feats.writeStream.format("parquet")

@@ -15,12 +15,18 @@ import struct
 import numpy as np
 import pytest
 
-from bytesprocessor_spark.functions.bytes import FEATURE_WIDTH, bytes_to_features
+from bytesprocessor_spark.functions.bytes import (
+    FEATURE_WIDTH,
+    bytes_to_features,
+    features_matrix,
+)
 from bytesprocessor_spark.operators.labeling import AttackSpec
-from bytesprocessor_spark.pipeline import process_pcap, with_features
+from bytesprocessor_spark.pipeline import process_pcap
 from bytesprocessor_spark.sources.pcap import (
+    PACKET_SCHEMA,
     iter_pcap_records,
     parse_frame,
+    parse_pcap_bytes,
     read_pcap,
     write_pcap,
 )
@@ -101,6 +107,14 @@ ATTACKS = (
 RANGES = ((900.0, 1500.0), (1900.0, 2100.0))
 
 
+def expected_rows(path: str) -> list[tuple]:
+    """The in-process reference parse of a capture, as sorted row
+    tuples in PACKET_SCHEMA column order."""
+    cols = [f.name for f in PACKET_SCHEMA.fields]
+    data = open(path, "rb").read()
+    return sorted(tuple(r[c] for c in cols) for r in parse_pcap_bytes(data))
+
+
 def test_iter_pcap_records_roundtrip(tmp_path):
     p = str(tmp_path / "x.pcap")
     pkts = make_fixture_pcap(p)
@@ -165,34 +179,54 @@ def test_read_pcap_spark(spark, tmp_path):
     assert protos == {"6", "17"}
 
 
-def test_read_pcap_split_matches_whole_file(spark, tmp_path):
-    """The record-offset split reader must produce exactly the rows of
-    the whole-file reader (and no sub-chunk duplication — the reference
-    bug at BytesProcessor.py:196-205 that SURVEY §3.4.4 bans)."""
-    from bytesprocessor_spark.sources.pcap import index_pcap_chunks, read_pcap_split
+def test_read_pcap_splits_match_whole_file_parse(spark, tmp_path):
+    """The record-offset splits must produce exactly the rows of the
+    in-process whole-file parse (and no sub-chunk duplication — the
+    reference bug at BytesProcessor.py:196-205 that SURVEY §3.4.4
+    bans)."""
+    from bytesprocessor_spark.sources.pcap import index_pcap_chunks
 
     p = str(tmp_path / "s.pcap")
     make_fixture_pcap(p)
     whole = sorted(map(tuple, read_pcap(spark, p).collect()))
-    split = sorted(map(tuple, read_pcap_split(spark, p, split_packets=4).collect()))
-    assert split == whole and len(split) == 9
+    split = sorted(map(tuple, read_pcap(spark, p, split_packets=4).collect()))
+    assert split == whole == expected_rows(p) and len(split) == 9
     chunks = list(index_pcap_chunks(p, 4))
     assert len(chunks) == 3  # 12 records / 4 per chunk
     assert sum(c[2] for c in chunks) + 24 == (tmp_path / "s.pcap").stat().st_size
 
 
-def test_with_features_pad_truncate_scale(spark):
-    df = spark.createDataFrame(
-        [(b"\x00\xff\x80",), (b"",), (b"Z" * 2000,)], "payload binary"
-    )
-    out = with_features(df, width=10).collect()
-    a0 = out[0].features
+def test_index_stops_at_record_past_eof(spark, tmp_path):
+    """A record whose incl_len runs past the end of the file ends the
+    index walk exactly where it ends the in-process parse: no chunk
+    claims bytes the file does not have."""
+    from bytesprocessor_spark.sources.pcap import index_pcap_chunks
+
+    p = str(tmp_path / "eof.pcap")
+    frame = eth(payload=ipv4("10.0.0.1", "10.0.0.2", 6, tcp(1234, 80, b"P" * 600)))
+    write_pcap(p, [(1000.0 + i, frame) for i in range(1000)])
+    raw = bytearray(open(p, "rb").read())
+    rec10 = 24 + 10 * (16 + len(frame))
+    struct.pack_into("<I", raw, rec10 + 8, 0x7FFFFFFF)  # incl_len of record 10
+    open(p, "wb").write(bytes(raw))
+
+    chunks = list(index_pcap_chunks(p, 4))
+    assert sum(c[2] for c in chunks) <= len(raw) - 24
+    assert [c[2] for c in chunks] == [4 * (16 + len(frame))] * 2 + [2 * (16 + len(frame))]
+    rows = sorted(map(tuple, read_pcap(spark, p, split_packets=4).collect()))
+    assert rows == expected_rows(p) and len(rows) == 10
+
+
+def test_features_matrix_pad_truncate_scale():
+    mat = features_matrix([b"\x00\xff\x80", b"", b"Z" * 2000], width=10)
+    assert mat.shape == (3, 10) and mat.dtype == np.float32
+    a0 = mat[0]
     assert len(a0) == 10
     assert a0[0] == 0.0 and a0[1] == 1.0
     assert a0[2] == np.float32(0x80) / np.float32(255)
-    assert a0[3:] == [0.0] * 7
-    assert out[1].features == [0.0] * 10
-    a2 = out[2].features
+    assert list(a0[3:]) == [0.0] * 7
+    assert list(mat[1]) == [0.0] * 10
+    a2 = mat[2]
     assert len(a2) == 10 and all(v == np.float32(ord("Z")) / np.float32(255) for v in a2)
 
 
@@ -202,12 +236,12 @@ def test_sql_features_match_numpy(spark):
     data = bytes(range(256))
     df = spark.createDataFrame([(data,)], "payload binary")
     sql_row = df.select(bytes_to_features(F.col("payload"), 300).alias("f")).collect()[0]
-    np_row = with_features(df, width=300).collect()[0]
+    np_row = features_matrix([data], width=300)[0]
     expected = np.zeros(300, dtype=np.uint8)
     expected[:256] = np.frombuffer(data, dtype=np.uint8)
     expected = expected / np.float32(255)
     assert np.allclose(sql_row.f, expected, atol=0)
-    assert np.allclose(np_row.features, expected, atol=0)
+    assert np.allclose(np_row, expected, atol=0)
 
 
 def test_process_pcap_end_to_end(spark, tmp_path):
@@ -288,9 +322,9 @@ def test_fragment_and_truncated_l4_dropped():
 
 
 def test_pcap_datasource_matches_readers(spark, tmp_path):
-    """The Python DataSource must produce exactly the whole-file
-    reader's rows (same split-parity contract as read_pcap_split),
-    honoring the split_packets option."""
+    """The Python DataSource must produce exactly the in-process
+    whole-file parse's rows (the same split-parity contract as
+    read_pcap), honoring the split_packets option."""
     from bytesprocessor_spark.sources.pcap_datasource import PcapDataSource
 
     p = str(tmp_path / "ds.pcap")
@@ -300,7 +334,7 @@ def test_pcap_datasource_matches_readers(spark, tmp_path):
         map(tuple, spark.read.format("pcap").option("split_packets", 4).load(p).collect())
     )
     whole = sorted(map(tuple, read_pcap(spark, p).collect()))
-    assert via_ds == whole and len(via_ds) == 9
+    assert via_ds == whole == expected_rows(p) and len(via_ds) == 9
 
     # empty capture -> zero rows, no failure
     empty = str(tmp_path / "empty.pcap")

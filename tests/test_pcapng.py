@@ -20,7 +20,6 @@ from bytesprocessor_spark.sources.pcap import (
     iter_pcap_records,
     parse_pcap_bytes,
     read_pcap,
-    read_pcap_split,
     write_pcap,
 )
 from bytesprocessor_spark.sources import pcapng
@@ -32,7 +31,7 @@ from bytesprocessor_spark.sources.pcapng import (
     write_pcapng,
 )
 
-from tests.test_pcap import make_fixture_pcap  # reuse the 12-packet corpus
+from tests.test_pcap import expected_rows, make_fixture_pcap  # reuse the 12-packet corpus
 
 
 def _fixture_packets(tmp_path):
@@ -162,15 +161,18 @@ def test_pcapng_chunk_split_parity_pure(tmp_path):
 
 
 def test_pcapng_spark_read_paths(spark, tmp_path):
-    """binaryFile path, split reader, and the DataSource all agree on a
-    pcapng input — and agree with the classic-pcap twin."""
+    """One-chunk and split reads and the DataSource all agree on a
+    pcapng input — and agree with the in-process parse of the
+    classic-pcap twin."""
     pkts, pcap_path = _fixture_packets(tmp_path)
     ng_path = str(tmp_path / "r.pcapng")
     write_pcapng(ng_path, pkts)
 
-    twin = sorted(map(tuple, read_pcap(spark, pcap_path).collect()))
+    twin = expected_rows(pcap_path)
+    assert expected_rows(ng_path) == twin
+    assert sorted(map(tuple, read_pcap(spark, pcap_path).collect())) == twin
     whole = sorted(map(tuple, read_pcap(spark, ng_path).collect()))
-    split = sorted(map(tuple, read_pcap_split(spark, ng_path, split_packets=4).collect()))
+    split = sorted(map(tuple, read_pcap(spark, ng_path, split_packets=4).collect()))
     assert whole == twin and split == twin and len(twin) == 9
 
     from bytesprocessor_spark.sources.pcap_datasource import PcapDataSource

@@ -333,11 +333,12 @@ def test_q21_semi_and_anti_on_one_key(spark):
 def test_fused_pcap_single_python_op(spark, tmp_path):
     """The fused pcap read (features=True) must plan exactly ONE
     Python operator (the parse worker computes features on its own
-    Arrow batch) and zero exchanges — a second Python node in the
-    stage is the chained-runner stall this design exists to avoid."""
+    Arrow batch) and zero exchanges — also when the capture is split
+    into several chunks: the chunk plan is built on the driver, so
+    there is no index job and no repartition of chunk rows."""
     import struct as _s
 
-    from bytesprocessor_spark.sources.pcap import read_pcap, write_pcap
+    from bytesprocessor_spark.sources.pcap import plan_chunks, read_pcap, write_pcap
 
     payload = bytes(range(64))
     l4 = _s.pack(">HHIIBBHHH", 1024, 443, 0, 0, 0x50, 0x18, 8192, 0, 0) + payload
@@ -348,14 +349,16 @@ def test_fused_pcap_single_python_op(spark, tmp_path):
     eth = b"\x02" * 6 + b"\x01" * 6 + _s.pack(">H", 0x0800)
     p = str(tmp_path / "one.pcap")
     write_pcap(p, [(1000.0 + i, eth + hdr + l4) for i in range(50)])
+    assert len(plan_chunks(p, 20)) == 3
 
-    df = read_pcap(spark, p, features=True, ranges=((1000.0, 2000.0),))
+    df = read_pcap(spark, p, split_packets=20, features=True, ranges=((1000.0, 2000.0),))
     plan = executed_plan(df)
-    assert plan.count("MapInPandas") == 1
+    assert plan.count("MapInArrow") == 1
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
     assert shuffle_count(df) == 0
     rows = df.select("features").limit(1).collect()
     assert len(rows[0][0]) == 1525
+    assert df.count() == 50
 
 
 def test_funnel_shares_user_partitioning(spark):

@@ -17,6 +17,7 @@ from bytesprocessor_spark.streaming.windows import (
     stream_dedup,
     tumbling_agg,
 )
+from bytesprocessor_spark.sources.pcapng import write_pcapng
 from bytesprocessor_spark.streaming.pcap_stream import stream_pcap_directory
 from tests.test_pcap import ATTACKS, RANGES, make_fixture_pcap
 
@@ -141,10 +142,15 @@ def test_pcap_streaming_pipeline(spark, tmp_path):
     assert first.where(F.col("is_forward")).count() == 3
 
     # drop a second file into the landing dir -> next micro-batch
-    make_fixture_pcap(str(landing / "b.pcap"))
+    pkts = make_fixture_pcap(str(landing / "b.pcap"))
+    q.processAllAvailable()
+    assert spark.read.parquet(out).count() == 2 * n_first
+
+    # a pcapng file is picked up like a classic one
+    write_pcapng(str(landing / "c.pcapng"), pkts)
     q.processAllAvailable()
     q.stop()
-    assert spark.read.parquet(out).count() == 2 * n_first
+    assert spark.read.parquet(out).count() == 3 * n_first
 
 
 def test_topk_per_key_transform_with_state(spark, tmp_path):
